@@ -7,6 +7,8 @@ converge to the same answer the batch plan computes.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from tests.conftest import SF_DIR
@@ -533,6 +535,85 @@ def test_state_store_is_rocksdb_backed(spark, tables):
         .collect()
     }
     assert got == want
+
+
+@contextlib.contextmanager
+def _session_partitions(spark, n):
+    """Pin the session's shuffle partitions to ``n`` for a block."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_state_partitions_follow_cores_and_caller_conf_survives(q, spark):
+    """Every stateful stream's state store runs min(session conf,
+    defaultParallelism) partitions — read from the queries' own
+    progress, for the parquet runner and the JDBC sink alike — and the
+    caller's batch conf reads back unchanged afterwards."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Log(StreamingQueryListener):
+        def __init__(self):
+            self.lock = threading.Lock()
+            self.parts: dict[str, set[int]] = {}
+            self.terminated = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            with self.lock:
+                for s in p.stateOperators or []:
+                    self.parts.setdefault(str(p.id), set()).add(
+                        s.numShufflePartitions
+                    )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.lock:
+                self.terminated += 1
+
+    log = Log()
+    spark.streams.addListener(log)
+    try:
+        with _session_partitions(spark, 200):
+            q("stream_dedup").count()
+            q("sink_jdbc_batch").count()
+            after = spark.conf.get("spark.sql.shuffle.partitions")
+        # listener events arrive asynchronously; a query's terminated
+        # event follows all of its progress events
+        deadline = time.time() + 60
+        while log.terminated < 2 and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(log)
+    assert after == "200"
+    want = min(200, spark.sparkContext.defaultParallelism)
+    assert len(log.parts) == 2, log.parts
+    assert all(v == {want} for v in log.parts.values()), (want, log.parts)
+
+
+def test_stream_output_independent_of_state_partitions(q, spark):
+    """Repartitioning state may never change a stream's result: the
+    watermark dedup and the session windows emit the same rows with
+    the session pinned to 1 and to 8 shuffle partitions."""
+    for key in ("stream_dedup", "stream_session"):
+        runs = []
+        for n in (1, 8):
+            with _session_partitions(spark, n):
+                df = q(key)
+                runs.append(_rows(df, *df.columns))
+        assert runs[0] == runs[1], key
 
 
 def test_stream_cdc_apply_equals_batch_merge(registry, spark):

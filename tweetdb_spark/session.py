@@ -109,6 +109,9 @@ def get_spark(app_name: str = "tweetdb-spark", cpus: int | None = None,
     local[N] for tests/bench; on a real cluster the same confs apply
     unchanged — AQE sizes shuffles at runtime, so the static
     ``shuffle.partitions`` is only an upper bound for the initial plan.
+    ``TWEETDB_SHUFFLE_PARTITIONS`` (default 32) sets only that batch
+    default; streams size their state partitions from the cores at
+    start (streaming.sources.drain_stream).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from tweetdb_spark.registry import query
 from tweetdb_spark.streaming.sources import (
+    drain_stream,
     read_events_stream,
     run_to_memory,
     run_to_parquet,
@@ -588,11 +589,14 @@ def _derby_available(spark) -> bool:
     return present
 
 
-def _purchase_totals_stream(spark, t):
-    """The shared upstream of both sink branches: per-user purchase
-    totals over the staged event stream, complete output mode."""
+def _drain_purchase_totals(spark, t, upsert) -> None:
+    """The shared stream of both sink branches: per-user purchase
+    totals over the staged event stream, complete output mode, drained
+    through the branch's foreachBatch ``upsert``."""
+    from tweetdb_spark import scratch
+
     s = read_events_stream(spark, _sf_dir(t), files_per_trigger=10)
-    return (
+    per_user = (
         s.where(F.col("event_type") == "purchase")
         # a keyed upsert sink cannot route a NULL key: the target PK
         # column rejects it (Derby) or silently treats every NULL as
@@ -602,6 +606,12 @@ def _purchase_totals_stream(spark, t):
         .where(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total"))
+    )
+    drain_stream(
+        spark,
+        per_user.writeStream.outputMode("complete")
+        .foreachBatch(upsert)
+        .option("checkpointLocation", scratch.fresh_dir("tweetdb_ckpt_sink")),
     )
 
 
@@ -699,17 +709,7 @@ def _sink_jdbc_derby(spark, t):
             raise
         c.close()
 
-    ckpt = scratch.fresh_dir("tweetdb_ckpt_sink")
-    q = (
-        _purchase_totals_stream(spark, t)
-        .writeStream.outputMode("complete")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _drain_purchase_totals(spark, t, upsert)
     return spark.read.jdbc(url, "purchase_totals").select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("n").cast("long").alias("n_purchases"),
@@ -739,8 +739,6 @@ def _sink_jdbc_sqlite(spark, t):
     init.commit()
     init.close()
 
-    per_user = _purchase_totals_stream(spark, t)
-
     def upsert(batch_df, batch_id: int) -> None:
         bid = int(batch_id)
 
@@ -766,16 +764,7 @@ def _sink_jdbc_sqlite(spark, t):
         # fan-in the same way)
         batch_df.coalesce(8).foreachPartition(write_partition)
 
-    ckpt = f"{tempfile.gettempdir()}/tweetdb_ckpt_sink_{_uuid.uuid4().hex[:8]}"
-    q = (
-        per_user.writeStream.outputMode("complete")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
+    _drain_purchase_totals(spark, t, upsert)
     con = sqlite3.connect(db_path)
     data = con.execute(
         "SELECT user_id, n, total FROM purchase_totals ORDER BY user_id"

@@ -16,6 +16,7 @@ to millis, which would break parity with the batch twins.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import shutil
@@ -33,6 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tweetdb_spark import scratch
 from tweetdb_spark.catalog import load_tables
 
 # JSON wire schema (ts_us = unix microseconds, exact).
@@ -253,50 +255,60 @@ def configure_state_store(spark: SparkSession) -> bool:
     return present
 
 
-class _stream_shuffle_partitions:
-    """Scope the engine's shuffle-partition count to a stream's run.
+@contextlib.contextmanager
+def _stream_shuffle_partitions(spark: SparkSession):
+    """Scope the state-partition count to a stream's start/drain window.
 
-    Streaming stages can't use AQE (micro-batch execution disables it),
-    so on a FOREIGN session (the driver's vanilla SparkSession) every
-    stateful operator runs at the 200-partition default — ~6x the task
-    count the fixture workload needs, paid per micro-batch (the r14
-    carve-out tour measured stream_watermark_late at 38 s mostly in
-    200-task state-store stages).  The state-store partition count is
-    read from the session conf at STREAM START, so setting it just for
-    the start/drain window and restoring afterwards leaves the caller's
-    batch confs untouched.  On the engine's own sessions this is a
-    no-op (get_spark already pins the same value).  At cluster scale
-    the operator sets TWEETDB_SHUFFLE_PARTITIONS to match executor
-    parallelism — state partitioning should track the cluster, not
-    Spark's static default.
+    Every stateful micro-batch runs one state-store task per shuffle
+    partition, and micro-batch execution disables AQE, so the count
+    read from the session at a stream's FIRST start is a fixed cost
+    paid on every trigger.  It is frozen into the checkpoint then, and
+    a restart from that checkpoint restores it whatever the session
+    says.  The target is ``defaultParallelism`` (the cores of a
+    local[N] master, the total executor cores on a cluster), so state
+    partitioning follows the cores the stream runs on with nothing for
+    the operator to set; a cluster whose executors are still
+    registering at first start reports fewer.  LOWER only, never raise
+    (review r14): a session pinned below that (tests pin 8) keeps its
+    value.  The caller's batch ``spark.sql.shuffle.partitions`` is
+    restored on exit.
     """
+    key = "spark.sql.shuffle.partitions"
+    try:
+        old = spark.conf.get(key)
+        target = min(int(old), spark.sparkContext.defaultParallelism)
+        spark.conf.set(key, str(target))
+    except Exception:
+        old = None
+    try:
+        yield
+    finally:
+        if old is not None:
+            spark.conf.set(key, old)
 
-    def __init__(self, spark):
-        self.spark = spark
-        self.target = int(os.environ.get("TWEETDB_SHUFFLE_PARTITIONS", "32"))
 
-    def __enter__(self):
-        try:
-            self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-            # LOWER only, never raise (review r14): a session whose
-            # partitions were pinned deliberately below the engine
-            # default (tests pin 8) must keep its smaller value — the
-            # scope exists to stop the 200-partition static default
-            # from taxing stateful micro-batches, not to override an
-            # explicit choice.
-            target = min(int(self.old), self.target)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        except Exception:
-            self.old = None
-        return self
+def drain_stream(
+    spark: SparkSession, writer, mode: str = "available_now"
+) -> None:
+    """Start a configured ``writeStream`` and run it until everything
+    available is processed: the one place streams with state start.
 
-    def __exit__(self, *exc):
-        if self.old is not None:
-            try:
-                self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-            except Exception:
-                pass
-        return False
+    The state store and the state-partition count are read at query
+    start, so both are set here, inside the partition scope.
+    mode="available_now": availableNow trigger, which processes what
+    the source holds at start in micro-batches, then stops.
+    mode="all_available": default trigger + processAllAvailable, which
+    keeps firing while the source reports new offsets (needed when
+    availability itself advances over time).
+    """
+    configure_state_store(spark)
+    with _stream_shuffle_partitions(spark):
+        if mode == "available_now":
+            writer.trigger(availableNow=True).start().awaitTermination()
+        else:
+            q = writer.start()
+            q.processAllAvailable()
+            q.stop()
 
 
 def run_to_parquet(df: DataFrame) -> DataFrame:
@@ -313,57 +325,35 @@ def run_to_parquet(df: DataFrame) -> DataFrame:
     read-back makes a zero-row sink dir readable (only
     _spark_metadata present).
     """
-    configure_state_store(df.sparkSession)
-    from tweetdb_spark import scratch
-
     out = scratch.fresh_dir("tweetdb_fsink")
-    ckpt = scratch.fresh_dir("tweetdb_fschk")
-    with _stream_shuffle_partitions(df.sparkSession):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain_stream(
+        df.sparkSession,
+        df.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", scratch.fresh_dir("tweetdb_fschk")),
+    )
     return df.sparkSession.read.schema(df.schema).parquet(out)
 
 
 def run_to_memory(
     df: DataFrame, mode: str = "append", drain: str = "available_now"
 ) -> DataFrame:
-    """Run a streaming frame to completion into an in-memory table.
-
-    drain="available_now": availableNow trigger — processes everything
-    available at query start in micro-batches, then stops.
-    drain="all_available": default trigger + processAllAvailable —
-    keeps firing micro-batches while the source reports new offsets
-    (needed when the source's availability itself advances over time).
-    Both run the real IncrementalExecution / state-store / watermark
-    machinery; returns the sink table as a DataFrame.
+    """Run a streaming frame to completion (``drain`` is the
+    :func:`drain_stream` mode) into an in-memory table; returns it.
 
     Lifetime contract: each call registers a uniquely-named in-memory
-    table (holding the result for the session's lifetime) and a /tmp
-    checkpoint dir; callers that loop many streams in one long session
-    should dropTempView / clean ckpt dirs when done — test/driver
-    usage (bounded calls per process) does not need to.
+    table (holding the result for the session's lifetime); callers
+    that loop many streams in one long session should dropTempView
+    when done.  The checkpoint dir is pid-tagged scratch, reclaimed by
+    this process's next call.
     """
-    configure_state_store(df.sparkSession)
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"tweetdb_ckpt_{name}")
-    writer = (
+    drain_stream(
+        df.sparkSession,
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", scratch.fresh_dir("tweetdb_memchk")),
+        drain,
     )
-    with _stream_shuffle_partitions(df.sparkSession):
-        if drain == "available_now":
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            q = writer.start()
-            q.processAllAvailable()
-            q.stop()
     return df.sparkSession.table(name)
