@@ -77,3 +77,28 @@ def registry():
 
     tweetdb_spark.load_all_operators()
     return tweetdb_spark
+
+
+def two_pass_forms(monkeypatch, build):
+    """Row multisets of ``build()`` with guards.TWO_PASS_MIN_BYTES
+    forced above every input (direct form) and to 0 (two-pass form).
+    Asserts the two physical operator trees (formatted plan, ids
+    stripped) differ first: a gate that ignored the patch would
+    otherwise compare one form with itself and pass."""
+    import re
+    from collections import Counter
+
+    from tweetdb_spark import guards
+
+    forms = []
+    for min_bytes in (1 << 60, 0):
+        monkeypatch.setattr(guards, "TWO_PASS_MIN_BYTES", min_bytes)
+        df = build()
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        tree = re.sub(r" \(\d+\)", "", plan.split("\n\n")[0])
+        forms.append((tree, Counter(map(tuple, df.collect()))))
+    (direct_plan, direct), (two_plan, two) = forms
+    assert direct_plan != two_plan, "forcing the gate did not change the plan"
+    return direct, two

@@ -1,13 +1,21 @@
-"""Dump formatted physical plans of the headline queries → PLANS.md.
+"""Dump formatted physical plans → PLANS.md, or full per-key plan files.
 
 Evidence artifact: lets a reviewer read the exact plans (pushed
 filters, join strategies, exchange placement) without running Spark.
 
-Usage: python tools/dump_plans.py
+Usage:
+    python tools/dump_plans.py
+        SHOWCASE trees + scan details → PLANS.md.
+    python tools/dump_plans.py --out plans/r17 --tag before|after [key ...]
+        full plans → DIR/<name>_<tag>.txt for each bench HEADLINE entry
+        (or the given registry keys) — the before/after pair of an
+        optimization.
+Both read the fixtures at $SPARK_GRAFT_SF_DIR (default sf0.01).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -56,6 +64,14 @@ SHOWCASE = [
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", help="write full plans here instead of PLANS.md")
+    ap.add_argument("--tag", default="before", choices=["before", "after"])
+    ap.add_argument("keys", nargs="*", help="registry keys (default: HEADLINE)")
+    args = ap.parse_args()
+    if args.keys and not args.out:
+        ap.error("keys need --out")
+
     import tweetdb_spark
     from tweetdb_spark.session import get_spark
 
@@ -63,7 +79,20 @@ def main() -> None:
     spark = get_spark("tweetdb-plans")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    queries = tweetdb_spark.QUERIES
+    if args.out:
+        write_full(spark, queries, sf_dir, args.out, args.tag, args.keys)
+    else:
+        write_showcase(spark, queries, sf_dir)
 
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def write_showcase(spark, queries, sf_dir: str) -> None:
     out = ["# PLANS — formatted physical plans of showcase queries",
            "",
            f"Generated by `python tools/dump_plans.py` at `{sf_dir}`. These are",
@@ -71,10 +100,7 @@ def main() -> None:
            "coalesces partitions at runtime).",
            ""]
     for key, why in SHOWCASE:
-        df = tweetdb_spark.QUERIES[key](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _formatted(queries[key](spark, sf_dir))
         # keep the tree + the scan details; drop the long per-node dumps
         tree, _, details = plan.partition("\n\n\n")
         keep = [tree.strip()]
@@ -87,6 +113,22 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
+
+
+def write_full(spark, queries, sf_dir: str, out_dir: str, tag: str,
+               only: list[str]) -> None:
+    from bench import HEADLINE
+
+    os.makedirs(out_dir, exist_ok=True)
+    items = [(k, k) for k in only] if only else list(HEADLINE.items())
+    for name, key in items:
+        spark.sparkContext.setJobDescription(f"plan:{name}")
+        plan = _formatted(queries[key](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} (registry key: {key}) @ {sf_dir} — {tag}\n")
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} chars)")
 
 
 if __name__ == "__main__":

@@ -7,6 +7,12 @@ PassJoin segments).  They are correct at fixture scale and would be
 catastrophic at corpus scale, so each one routes its input through
 :func:`exact_twin_input`, which fails fast — loudly, before any join
 is planned — if someone points it at a large table.
+
+:func:`above_two_pass_gate` is the one size decision for the bucketed
+two-pass global-window rewrites (``corpus_pack``,
+``corpus_token_budget``, ``corpus_interleave``, ``value_histogram``).
+It reads only :data:`TWO_PASS_MIN_BYTES` — no environment variable
+overrides it; tests patch the module global.
 """
 
 from __future__ import annotations
@@ -17,15 +23,20 @@ from pyspark.sql import DataFrame
 # means someone mistook the ground-truth twin for the scale path.
 EXACT_TWIN_MAX_ROWS = 50_000
 
-# Shared stats gate for the bucketed two-pass global-window rewrites
-# (corpus_interleave / corpus_token_budget / value_histogram): inputs
-# whose catalyst size estimate is below this run the direct
-# single-window form, larger inputs the exact bucketed two-pass form.
-# One constant (r17, r16 ADVICE: analytics.py had its own str(1 << 25)
-# literal that could silently drift from text.py's) — the measured
-# crossover evidence lives at text._INTERLEAVE_TWO_PASS_MIN_BYTES's
-# original definition comment; per-key env overrides keep both forms
-# testable either way.
+# Size gate for the bucketed two-pass global-window rewrites of
+# corpus_pack, corpus_token_budget, corpus_interleave and
+# value_histogram: inputs whose catalyst size estimate is at least this
+# run the exact bucketed two-pass form, smaller ones the direct
+# single-window form.  Not env-overridable; read at call time by
+# above_two_pass_gate, so tests monkeypatch it to force either form.
+# The two-pass form pays extra member-scale passes to remove the
+# constant-parallelism sort.  Measured crossover (interleaved noop A/B,
+# min-of-runs): corpus_interleave at 500k docs / 3.3 MB parquet, direct
+# 0.78 s vs two-pass 1.58 s; at 5M docs / 86 MB, direct 5.42 s vs
+# two-pass 3.56 s (sweeps/interleave_twopass_r16.log; token_budget's
+# crossover lies in the same window).  32 MiB errs toward parallelism:
+# a too-early two-pass costs a bounded constant, a too-late single sort
+# is the unbounded one-task wall.
 TWO_PASS_MIN_BYTES = 1 << 25
 
 
@@ -46,3 +57,11 @@ def exact_twin_input(
             f"Use its scale sibling `{scale_twin}` instead."
         )
     return df
+
+
+def above_two_pass_gate(df: DataFrame) -> bool:
+    """True iff ``df``'s catalyst size estimate is at least
+    :data:`TWO_PASS_MIN_BYTES` — file-size stats, no job; the same
+    estimate the broadcast threshold reads."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return size >= TWO_PASS_MIN_BYTES

@@ -1797,8 +1797,10 @@ def dedup_minhash_verdicts(spark, t):
     docs survive".  This operator computes exactly that, in three
     output-bounded stages:
 
-    1. **Exact collapse first** (the production ordering): group by
-       md5(text), elect min-doc_id representative.  Byte-identical
+    1. **Collapse first** (the production ordering), in one window
+       exchange: every doc's sorted distinct xxhash64 token ids, then
+       the min doc_id per token set is its representative.  The
+       token-set groups coarsen the md5 groups, so byte-identical
        clones never enter the LSH tier — on the sf1 fixture this cuts
        candidate-pair volume ~100x because pair count is quadratic in
        clone multiplicity.
@@ -1806,10 +1808,11 @@ def dedup_minhash_verdicts(spark, t):
        thresholds to dedup_minhash_lsh (xxhash64 token ids, 16
        minhashes in 8 bands of 2, exact token-Jaccard dist <= 0.2
        verify on candidates).  Connectivity is PROVABLY unchanged by
-       the collapse: clones share their representative's token set, so
-       every clone-pair edge maps to the same rep (intra-group) or to
-       a rep-rep edge with identical Jaccard and identical band
-       signatures (inter-group) — recall is the pair form's recall.
+       the collapse: docs in one group share their representative's
+       token set, so every intra-group edge maps to the same rep and
+       every inter-group edge to a rep-rep edge with identical Jaccard
+       and identical band signatures — recall is the pair form's
+       recall.
     3. **Components + verdicts**: min-label propagation with pointer
        doubling over the verified rep-rep edges (the shared
        _min_label_components loop), canonical keeper per component by
@@ -1837,125 +1840,43 @@ def dedup_minhash_verdicts(spark, t):
     h = F.coalesce(
         F.md5("text"), F.concat(F.lit(":null:"), F.col("doc_id").cast("string"))
     )
-    # Gated collapse (r17 optimization round).  Two output-identical
-    # forms produce the same (member, uids) pair — member =
-    # (doc_id, h, n_chars, ts_rep), uids = (rep doc_id, sorted token
-    # ids) — selected by the shared 32 MiB stats gate
-    # (guards.TWO_PASS_MIN_BYTES; override
-    # TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES):
-    #
-    # BELOW the gate — single-exchange collapse (guide §2.4 "remove
-    # shuffles outright"): the token-set partition is a COARSENING of
-    # the md5 partition (byte-identical text ⟹ identical token array
-    # ⟹ identical ts_key), so ONE min-window over ts_key on MEMBERS
-    # yields exactly the ts_rep the two-level form produces — member
-    # ts-group = union of the md5-groups whose reps share the token
-    # set, so min over members = min over the per-md5-group minima =
-    # min over reps.  This drops one member-frame exchange, one
-    # window, one eager checkpoint, and the rep_map inherit join
-    # (jobs 18 → 15, Exchange 8 → 6 at sf0.1 —
-    # sweeps/mh_singlepass_r17.log) at the cost of tokenizing every
-    # member instead of every text-rep.
-    #
-    # ABOVE the gate — the r16 two-level form (guide §1.2 "don't
-    # compute things you throw away"): md5-collapse first so clones
-    # are NEVER tokenized, then the token-set window over reps only.
-    # At fixture scale the extra exchange is pure fixed cost (the
-    # forms tie at sf10's 100x clone multiplicity: 14.5/14.4 vs
-    # 14.7/15.0 s), but at extreme clone multiplicity member-tokenize
-    # dominates the saved exchange (10M docs / 2000x clones: 29.8 s
-    # two-level vs 35.5–38.9 s single-exchange) — the md5 collapse is
-    # exactly the guard against that, so the corpus-scale posture
-    # keeps it.  A/B checksum-identical across forms at
-    # sf0.01/sf0.1/sf10/10M-docs; NULL-text docs keep their per-doc
-    # sentinel groups in both (i is NULL iff text is NULL, and
-    # xxhash64(NULL) is a constant, hence the sentinel).
-    import os
-
-    ts_key_of = lambda i_col, id_col: F.when(  # noqa: E731
-        i_col.isNotNull(),
-        F.concat(F.lit("t:"), F.xxhash64(i_col.cast("string")).cast("string")),
-    ).otherwise(F.concat(F.lit(":null:"), id_col.cast("string")))
-    from tweetdb_spark.guards import TWO_PASS_MIN_BYTES
-
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES", str(TWO_PASS_MIN_BYTES)
-        )
+    # Single-exchange collapse: the token-set partition COARSENS the md5
+    # partition (byte-identical text ⟹ identical token ids ⟹ identical
+    # ts_key), so one min-window over ts_key on every member elects the
+    # same rep as an md5-first two-level collapse, with one exchange,
+    # one window and one checkpoint fewer (sweeps/mh_singlepass_r17.log).
+    # The trade is tokenizing every clone: at 10M docs x 2000 clone
+    # multiplicity the two-level form ran 29.8 s vs 35.5-38.9 s here,
+    # sf10 tied (OPTIMIZATION_r17.md); on the seeded perfbench batch
+    # workload two-level was slower in 8/8 pairs (5.72 vs 5.23 s
+    # headline).  i is NULL iff text is NULL and xxhash64(NULL) is a
+    # constant, so NULL-text docs take h's per-doc sentinel form.
+    i_expr = F.sort_array(
+        F.expr("transform(array_distinct(split(text, ' ')), w -> xxhash64(w))")
     )
-    doc_bytes = int(
-        t["documents"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    ts_key = F.when(
+        F.col("i").isNotNull(),
+        F.concat(F.lit("t:"), F.xxhash64(F.col("i").cast("string")).cast("string")),
+    ).otherwise(F.concat(F.lit(":null:"), F.col("doc_id").cast("string")))
+    docs = t["documents"].select("doc_id", h.alias("h"), "n_chars", i_expr.alias("i"))
+    # localCheckpoint (r16, guide §5 / §3.3): the collapse chain feeds
+    # every downstream subtree (band a/b sides, t_a, t_b, component
+    # nodes, member assembly); the checkpoint holds one narrow row per
+    # doc plus token ids ONLY for the elected rep.
+    docs = docs.withColumn(
+        "ts_rep", F.min("doc_id").over(Window.partitionBy(ts_key))
+    ).select(
+        "doc_id",
+        "h",
+        "n_chars",
+        "ts_rep",
+        F.when(F.col("doc_id") == F.col("ts_rep"), F.col("i")).alias("rep_i"),
     )
-    if doc_bytes < threshold:
-        i_expr = F.sort_array(
-            F.expr("transform(array_distinct(split(text, ' ')), w -> xxhash64(w))")
-        )
-        docs = t["documents"].select(
-            "doc_id", h.alias("h"), "n_chars", i_expr.alias("i")
-        )
-        # localCheckpoint (r16, guide §5 / §3.3): the collapse chain
-        # feeds every downstream subtree (band a/b sides, t_a, t_b,
-        # component nodes, member assembly); the checkpoint holds one
-        # narrow row per doc plus token ids ONLY for the elected rep.
-        docs = docs.withColumn(
-            "ts_rep",
-            F.min("doc_id").over(
-                Window.partitionBy(ts_key_of(F.col("i"), F.col("doc_id")))
-            ),
-        ).select(
-            "doc_id",
-            "h",
-            "n_chars",
-            "ts_rep",
-            F.when(F.col("doc_id") == F.col("ts_rep"), F.col("i")).alias(
-                "rep_i"
-            ),
-        )
-        docs = docs.localCheckpoint(eager=True)
-        member = docs.select("doc_id", "h", "n_chars", "ts_rep")
-        uids = docs.where(F.col("doc_id") == F.col("ts_rep")).select(
-            "doc_id", F.col("rep_i").alias("i")
-        )
-    else:
-        docs = t["documents"].select("doc_id", h.alias("h"), "n_chars", "text")
-        docs = docs.withColumn(
-            "rep_id", F.min("doc_id").over(Window.partitionBy("h"))
-        ).select(
-            "doc_id",
-            "h",
-            "n_chars",
-            "rep_id",
-            F.when(F.col("doc_id") == F.col("rep_id"), F.col("text")).alias(
-                "rep_text"
-            ),
-        )
-        docs = docs.localCheckpoint(eager=True)
-        toks = docs.where(F.col("doc_id") == F.col("rep_id")).select(
-            "doc_id",
-            F.array_distinct(F.split("rep_text", " ")).alias("tokens"),
-        )
-        ids = toks.select(
-            "doc_id",
-            F.sort_array(
-                F.expr("transform(tokens, w -> xxhash64(w))")
-            ).alias("i"),
-        )
-        ids = ids.withColumn(
-            "ts_rep",
-            F.min("doc_id").over(
-                Window.partitionBy(ts_key_of(F.col("i"), F.col("doc_id")))
-            ),
-        ).localCheckpoint(eager=True)
-        # normalize to the shared downstream shape: every member row
-        # carries its ts_rep (rep_map is rep-scale, broadcast by the
-        # planner)
-        rep_map = ids.select(F.col("doc_id").alias("rep_id"), "ts_rep")
-        member = docs.join(rep_map, "rep_id").select(
-            "doc_id", "h", "n_chars", "ts_rep"
-        )
-        uids = ids.where(F.col("doc_id") == F.col("ts_rep")).select(
-            "doc_id", "i"
-        )
+    docs = docs.localCheckpoint(eager=True)
+    member = docs.select("doc_id", "h", "n_chars", "ts_rep")
+    uids = docs.where(F.col("doc_id") == F.col("ts_rep")).select(
+        "doc_id", F.col("rep_i").alias("i")
+    )
     # minhash ids: same value set as the old transform(tokens, ...) &
     # mask form — masking the already-hashed ids; minhash is
     # order/multiplicity-invariant so banding is unchanged

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tweetdb_spark.guards import above_two_pass_gate
 from tweetdb_spark.registry import query
 
 
@@ -669,22 +670,10 @@ def value_histogram(spark, t):
     range (constant, NULL-only, or unbounded) collapses to one bucket
     — the direct form's parallelism, never wrong output.
     """
-    import os
-
     from pyspark.sql.window import Window
 
     e = t["events"].select("event_type", "value", "event_id")
-    from tweetdb_spark.guards import TWO_PASS_MIN_BYTES
-
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_HISTOGRAM_TWO_PASS_MIN_BYTES", str(TWO_PASS_MIN_BYTES)
-        )
-    )
-    ev_bytes = int(
-        t["events"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if ev_bytes < threshold:
+    if not above_two_pass_gate(t["events"]):
         w = Window.partitionBy("event_type").orderBy("value", "event_id")
         return (
             e.select(
